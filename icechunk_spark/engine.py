@@ -26,12 +26,13 @@ def local_df(spark: SparkSession, rows, schema):
     taken by name from dict/Row items and laid out in schema order.
     """
     import pandas as pd
+    from pyspark.sql.types import _parse_datatype_string
 
     rows = list(rows)
     if isinstance(schema, str):
-        names = [c.strip().split(" ")[0] for c in schema.split(",")]
-    else:
-        names = list(schema.fieldNames())
+        # a real DDL parse: splitting on "," breaks map<k,v>/struct<...>
+        schema = _parse_datatype_string(schema)
+    names = list(schema.fieldNames())
     if not rows:
         # empty frames must ALSO avoid the RDD path: createDataFrame
         # over an empty python list (or an empty pandas frame — the

@@ -211,22 +211,27 @@ def write_manifests(
     return rels
 
 
-def resolve_manifest_rows_local(
-    root,
-    manifests: list[str],
-    node_id: str | None = None,
-    chunk_key: str | None = None,
-) -> list[dict]:
-    """Spark-free manifest resolution (pyarrow) for executor-side point
-    reads: a read-only Session unpickled inside a task has no JVM
-    gateway, so the advertised read-scaling path (pickle a readonly
-    session into a UDF, fetch chunk bytes per row) must not launch
-    Spark jobs.  Same LSM semantics as ``resolve_manifests``: latest
-    seq per (node_id, chunk_key) wins, tombstones dropped.  Pushdown
-    via pyarrow dataset filters; split manifests prune at file level
-    first (``prune_manifest_paths``)."""
+def manifest_arrow_schema():
+    """MANIFEST_SCHEMA as a pyarrow schema, for the Spark-free readers
+    and writers; derived from the DDL so the row format is declared in
+    one place (pyarrow import deferred: executors pay it only when
+    they take these paths)."""
+    import pyarrow as pa
+
+    types = {
+        "string": pa.string(),
+        "int": pa.int32(),
+        "bigint": pa.int64(),
+        "boolean": pa.bool_(),
+        "binary": pa.binary(),
+    }
+    fields = (f.split() for f in MANIFEST_SCHEMA.split(","))
+    return pa.schema([(name, types[ddl_type]) for name, ddl_type in fields])
+
+
+def _point_filter(node_id: str | None, chunk_key: str | None):
+    """pyarrow predicate for a node and/or one chunk key."""
     import pyarrow.compute as pc
-    import pyarrow.dataset as ds
 
     flt = None
     if node_id is not None:
@@ -234,15 +239,51 @@ def resolve_manifest_rows_local(
     if chunk_key is not None:
         k = pc.field("chunk_key") == chunk_key
         flt = k if flt is None else (flt & k)
-    rows: list[dict] = []
-    for rel in prune_manifest_paths(manifests, node_id):
-        dataset = ds.dataset(data_path(root, rel), format="parquet")
-        rows.extend(dataset.to_table(filter=flt).to_pylist())
+    return flt
+
+
+def _read_manifest_rows_local(
+    root, rel: str, node_id: str | None = None, chunk_key: str | None = None
+) -> list[dict]:
+    """Pre-dedup rows of one manifest (or staged) parquet dir, read
+    with pyarrow through the URI-aware bulk plane (``fsio``), with the
+    node/key predicate pushed down."""
+    import pyarrow.dataset as ds
+
+    from icechunk_spark.repo import fsio
+
+    fs, path = fsio._fs_path(data_path(root, rel))
+    dataset = ds.dataset(
+        path, filesystem=fs, format="parquet", schema=manifest_arrow_schema()
+    )
+    return dataset.to_table(filter=_point_filter(node_id, chunk_key)).to_pylist()
+
+
+def resolve_manifest_rows_local(
+    root,
+    manifests: list[str],
+    node_id: str | None = None,
+    chunk_key: str | None = None,
+    staged: "list[str] | tuple[str, ...]" = (),
+) -> list[dict]:
+    """Spark-free manifest resolution (pyarrow): the point-read path on
+    the driver and in executors, where an unpickled session has no JVM
+    gateway.  Same LSM semantics as ``resolve_manifests``: latest seq
+    per (node_id, chunk_key) wins, tombstones dropped.  ``staged``
+    relpaths (a session's file-staged changes) overlay the base in
+    staging order, later files shadowing earlier ones — the rule
+    ``Session._resolved_manifest`` applies in Spark.  Split manifests
+    prune at file level first (``prune_manifest_paths``); the node/key
+    predicate is pushed down into each file scan."""
     best: dict[tuple[str, str], dict] = {}
-    for r in rows:
-        key = (r["node_id"], r["chunk_key"])
-        if key not in best or r["seq"] > best[key]["seq"]:
-            best[key] = r
+    for rel in prune_manifest_paths(manifests, node_id):
+        for r in _read_manifest_rows_local(root, rel, node_id, chunk_key):
+            key = (r["node_id"], r["chunk_key"])
+            if key not in best or r["seq"] > best[key]["seq"]:
+                best[key] = r
+    for rel in staged:
+        for r in _read_manifest_rows_local(root, rel, node_id, chunk_key):
+            best[(r["node_id"], r["chunk_key"])] = r
     return [r for r in best.values() if r["op"] == "set"]
 
 

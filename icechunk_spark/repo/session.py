@@ -281,10 +281,11 @@ class Session:
     # An unpickled read-only session inside a Spark task has no JVM
     # gateway: ``getActiveSession()`` is None there, so ``spark`` must
     # not be resolved eagerly at unpickle time and DataFrame APIs must
-    # fail with a clear error while the point-read APIs
-    # (get_chunk_bytes / chunk_type / chunk_coordinates) fall back to
-    # pyarrow (reference parity: readonly sessions are pickled into
-    # tasks for read scaling — icechunk-python session.py:39-60).
+    # fail with a clear error (reference parity: readonly sessions are
+    # pickled into tasks for read scaling — icechunk-python
+    # session.py:39-60).  Point reads (get_chunk_bytes / chunk_type)
+    # never need the handle: pyarrow is their path on the driver too,
+    # unless a lazy staged DataFrame must be overlaid.
 
     @property
     def spark(self) -> SparkSession:
@@ -1144,21 +1145,28 @@ class Session:
         return ChunkType.native
 
     def _point_manifest_rows(self, node_id: str, chunk_key: str) -> list[dict]:
-        """Resolved manifest rows for ONE chunk.  Driver-side this is a
-        pruned Spark scan (read-your-writes via the staged overlay);
-        executor-side (no JVM gateway) it is a pyarrow point lookup —
-        read-only sessions have nothing staged, so base-only resolution
-        is exact there."""
-        if not self._has_spark:
-            return mf.resolve_manifest_rows_local(
-                self.root, self._base.manifests, node_id, chunk_key
-            )
-        return [
-            r.asDict()
-            for r in self._resolved_manifest(node_id, None)
-            .filter(F.col("chunk_key") == chunk_key)
-            .collect()
-        ]
+        """Resolved manifest rows for ONE chunk, without a Spark job: a
+        pyarrow lookup over the base manifests (node and chunk key pushed
+        down) overlaid with the file-staged changes, on the driver and
+        in executors alike — the analog of icechunk's get_chunk_ref.
+        Only a session holding a lazy staged DataFrame (write_array_df,
+        delete_chunks_prefix, shift/reindex, rebase remainders) resolves
+        through Spark, the one path that can read that overlay.  The
+        chunk buffer is not consulted: callers check it first."""
+        if any(kind == "df" for kind, _ in self._staged):
+            return [
+                r.asDict()
+                for r in self._resolved_manifest(node_id, None)
+                .filter(F.col("chunk_key") == chunk_key)
+                .collect()
+            ]
+        return mf.resolve_manifest_rows_local(
+            self.root,
+            self._base.manifests,
+            node_id,
+            chunk_key,
+            staged=[rel for _, rel in self._staged],
+        )
 
     def get_chunk_bytes(self, path: str, chunk_key: str) -> bytes | None:
         meta = self.array_meta(path)
@@ -1183,21 +1191,14 @@ class Session:
             return fsio.read_range(vp, r["voffset"], r["vlength"])
         if r["inline"] is not None:
             return bytes(r["inline"])
-        if not self._has_spark:  # executor-side: pyarrow point read
-            import pyarrow.compute as pc
-            import pyarrow.dataset as ds
+        import pyarrow.compute as pc
+        import pyarrow.dataset as ds
 
-            tbl = ds.dataset(_dp(self.root, r["file"]), format="parquet").to_table(
-                filter=pc.field("chunk_id") == r["chunk_id"], columns=["payload"]
-            )
-            return tbl["payload"][0].as_py() if tbl.num_rows else None
-        payload = (
-            self.spark.read.parquet(_dp(self.root, r["file"]))
-            .filter(F.col("chunk_id") == r["chunk_id"])
-            .select("payload")
-            .collect()
+        fs, p = fsio._fs_path(_dp(self.root, r["file"]))
+        tbl = ds.dataset(p, filesystem=fs, format="parquet").to_table(
+            filter=pc.field("chunk_id") == r["chunk_id"], columns=["payload"]
         )
-        return bytes(payload[0]["payload"]) if payload else None
+        return tbl["payload"][0].as_py() if tbl.num_rows else None
 
     # --- array reorganization (rearrange sessions) ------------------------
 
@@ -1424,12 +1425,12 @@ class Session:
                 )
             if rows:
                 _write_parquet_rows(
-                    _dp(self.root, rel), rows, _PAYLOAD_ARROW_SCHEMA
+                    _dp(self.root, rel), rows, _payload_arrow_schema()
                 )
             mrel = os.path.join(
                 "staging", self.session_id, f"m{len(self._staged):05d}.parquet"
             )
-            _write_parquet_rows(_dp(self.root, mrel), refs, _manifest_arrow_schema())
+            _write_parquet_rows(_dp(self.root, mrel), refs, mf.manifest_arrow_schema())
             self._staged.append(("file", mrel))
         self._chunk_buffer.clear()
 
@@ -2301,40 +2302,6 @@ class ForkSession(Session):
         self._config_override = None
 
 
-def _arrow_fs(path: str):
-    import pyarrow.fs as pafs
-
-    if "://" in path:
-        return pafs.FileSystem.from_uri(path)
-    return pafs.LocalFileSystem(), path
-
-
-def _manifest_arrow_schema():
-    import pyarrow as pa
-
-    return pa.schema(
-        [
-            ("node_id", pa.string()),
-            ("chunk_key", pa.string()),
-            ("c0", pa.int32()),
-            ("c1", pa.int32()),
-            ("c2", pa.int32()),
-            ("c3", pa.int32()),
-            ("chunk_id", pa.string()),
-            ("file", pa.string()),
-            ("n_bytes", pa.int64()),
-            ("op", pa.string()),
-            ("is_virtual", pa.bool_()),
-            ("vpath", pa.string()),
-            ("voffset", pa.int64()),
-            ("vlength", pa.int64()),
-            ("inline", pa.binary()),
-            ("seq", pa.int64()),
-            ("vchecksum", pa.string()),
-        ]
-    )
-
-
 def _payload_arrow_schema():
     import pyarrow as pa
 
@@ -2349,9 +2316,6 @@ def _txlog_arrow_schema():
     )
 
 
-_PAYLOAD_ARROW_SCHEMA = None  # resolved lazily (pyarrow import cost)
-
-
 def _write_parquet_rows(path: str, rows: list[dict], schema) -> None:
     """Write rows as a single-part parquet DIRECTORY (the same layout
     Spark's coalesce(1).write.parquet produces) using only pyarrow —
@@ -2359,9 +2323,7 @@ def _write_parquet_rows(path: str, rows: list[dict], schema) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    if schema is None:
-        schema = _payload_arrow_schema()
-    fs, p = _arrow_fs(path)
+    fs, p = fsio._fs_path(path)
     fs.create_dir(p, recursive=True)
     keyed = [
         {k: r.get(k) for k in schema.names} for r in rows

@@ -20,7 +20,12 @@ SF_DIR = "/root/testdata/sf0.001"
 #: model tests with a reduced example count via ``scaled_examples``.
 #: Set ICS_FULL_SUITE=1 to run everything at full depth (the tier the
 #: optimization rounds run before shipping).
-FULL_SUITE = bool(os.environ.get("ICS_FULL_SUITE"))
+FULL_SUITE = os.environ.get("ICS_FULL_SUITE", "").strip().lower() in (
+    "1",
+    "true",
+    "yes",
+    "on",
+)
 
 
 def scaled_examples(n: int) -> int:

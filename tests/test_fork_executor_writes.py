@@ -127,3 +127,78 @@ def test_fork_merge_overlap_is_merge_order_wins(spark, tmp_path):
     w2.merge(g2, g1)  # reversed order -> g1 wins
     w2.commit("overlap2")
     assert repo.readonly_session().get_chunk_bytes("/a", "0") == b"G1" * 512
+
+
+def test_executor_fork_reads_its_own_staged_writes(spark, tmp_path):
+    """A fork that staged writes in one task and travels to a second
+    task must read them back there: the Spark-free point read overlays
+    the fork's staged files on the base manifests (latest staging
+    wins, tombstones hide)."""
+    root = str(tmp_path / "repo_ryw")
+    repo = Repository.create(spark, root)
+    with repo.transaction(message="init") as s:
+        s.create_array("/a", shape=[16], chunk_shape=[4])
+        s.set_chunk_bytes("/a", "0", b"B" * 1024)
+        s.set_chunk_bytes("/a", "2", b"C" * 1024)
+    blob = pickle.dumps(repo.writable_session("main").fork())
+
+    def write(b):
+        import pickle as pkl
+
+        f = pkl.loads(b)
+        f.set_chunk_bytes("/a", "1", b"S" * 1024)  # absent from the base
+        f.delete_chunk("/a", "0")
+        return pkl.dumps(f)  # flushes the buffer to a staged file
+
+    def read(b):
+        import pickle as pkl
+
+        f = pkl.loads(b)
+        return [f.get_chunk_bytes("/a", k) for k in ("0", "1", "2", "3")]
+
+    sc = spark.sparkContext
+    blob = sc.parallelize([blob], 1).map(write).collect()[0]
+    got = sc.parallelize([blob], 1).map(read).collect()[0]
+    assert got == [None, b"S" * 1024, b"C" * 1024, None]
+
+
+def test_pyarrow_paths_take_the_filesystem_from_fsio(spark, tmp_path, monkeypatch):
+    """Every pyarrow read and write of the bulk plane resolves its
+    filesystem through ``fsio._fs_path``, so an ``s3a://`` data root
+    (mapped there to pyarrow's ``s3://``) works on the Spark-free
+    paths too.  A recorder backed by the local filesystem stands in
+    for the object store."""
+    import pyarrow.fs as pafs
+
+    from icechunk_spark.repo import LocalFilesystemStorage, fsio
+    from icechunk_spark.repo.manifests import manifest_arrow_schema
+    from icechunk_spark.repo.session import _write_parquet_rows
+
+    root = str(tmp_path / "repo_s3a")
+    repo = Repository.create(spark, root)
+    with repo.transaction(message="init") as s:
+        s.create_array("/a", shape=[8], chunk_shape=[4])
+        s.set_chunk_bytes("/a", "0", b"N" * 1024)
+
+    class S3aDataRoot(LocalFilesystemStorage):
+        @property
+        def data_root(self) -> str:
+            return "s3a://bucket" + self.root
+
+    seen: list[str] = []
+
+    def recorder(path):
+        assert path.startswith("s3a://bucket/"), path
+        seen.append(path)
+        return pafs.LocalFileSystem(), path[len("s3a://bucket") :]
+
+    monkeypatch.setattr(fsio, "_fs_path", recorder)
+    ro = Repository.open(spark, S3aDataRoot(root)).readonly_session()
+    assert ro.get_chunk_bytes("/a", "0") == b"N" * 1024
+    assert any("/manifests/" in p for p in seen)  # the manifest lookup
+    assert any("/chunks/" in p for p in seen)  # the payload read
+    out = "s3a://bucket" + str(tmp_path / "staged.parquet")
+    tomb = {"node_id": "n", "chunk_key": "0", "op": "del", "seq": 0}
+    _write_parquet_rows(out, [tomb], manifest_arrow_schema())
+    assert seen[-1] == out
+    assert (tmp_path / "staged.parquet" / "part-00000.parquet").exists()

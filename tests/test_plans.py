@@ -292,3 +292,19 @@ def test_refine_ext_plans(spark):
     # proving only the bounded shortlist ever left the executors
     plan = plan_of(mmr_diversify(spark, SF_DIR))
     assert "LocalTableScan" in plan or "ExistingRDD" in plan
+
+
+def test_local_df_parses_nested_ddl(spark):
+    """local_df parses its DDL string (the comma inside map<...> or
+    struct<...> separates no columns) and still plans a LocalRelation,
+    for rows and for the empty frame."""
+    from icechunk_spark.engine import local_df
+
+    ddl = "k string, m map<string,int>, s struct<p:int,q:string>"
+    df = local_df(spark, [{"k": "a", "m": {"x": 1, "y": 2}, "s": {"p": 1, "q": "z"}}], ddl)
+    assert df.columns == ["k", "m", "s"]
+    row = df.collect()[0]
+    assert row["m"] == {"x": 1, "y": 2} and row["s"]["q"] == "z"
+    assert "LocalTableScan" in plan_of(df)
+    empty = local_df(spark, [], ddl)
+    assert empty.columns == ["k", "m", "s"] and empty.collect() == []

@@ -10,7 +10,7 @@ Kept to few, small examples: each example spins real Spark jobs.
 from __future__ import annotations
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 
 from tests.conftest import scaled_examples
 from hypothesis import strategies as st
@@ -33,15 +33,39 @@ def prop_root(spark, tmp_path_factory):
     return tmp_path_factory.mktemp("prop")
 
 
+def _assert_point_lookup_matches_spark(sess) -> None:
+    """The Spark-free point lookup returns, for every key, exactly the
+    row the Spark resolve of the whole manifest holds for it."""
+    node_id = sess.array_meta("/a").node_id
+
+    def norm(row: dict) -> dict:
+        return {k: bytes(v) if isinstance(v, bytearray) else v for k, v in row.items()}
+
+    by_key = {r["chunk_key"]: norm(r.asDict()) for r in sess.chunk_manifest_df("/a").collect()}
+    for key in KEYS:
+        got = [norm(r) for r in sess._point_manifest_rows(node_id, key)]
+        assert got == ([by_key[key]] if key in by_key else []), (sess.snapshot_id, key)
+
+
 @settings(
     max_examples=scaled_examples(8),
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
-@given(history=history_st, data=st.data())
-def test_commit_history_matches_dict_model(spark, tmp_path_factory, history, data):
+@given(history=history_st, split=st.booleans())
+# always run once on split manifests (2 refs per file), whatever is drawn
+@example(
+    history=[[("0.0", b"a"), ("1.1", b"b"), ("2.0", b"c")], [("1.1", None), ("0.1", b"d")]],
+    split=True,
+)
+def test_commit_history_matches_dict_model(spark, tmp_path_factory, history, split):
+    from icechunk_spark.repo import ManifestConfig, RepositoryConfig
+
     root = str(tmp_path_factory.mktemp("r"))
-    repo = Repository.create(spark, root)
+    splitting = {"max_refs_per_manifest": 2} if split else None
+    repo = Repository.create(
+        spark, root, config=RepositoryConfig(manifest=ManifestConfig(splitting=splitting))
+    )
     with repo.transaction(message="init") as s:
         s.create_array("/a", shape=[24], chunk_shape=[8])
 
@@ -67,6 +91,14 @@ def test_commit_history_matches_dict_model(spark, tmp_path_factory, history, dat
                 snap_id,
                 key,
             )
+        _assert_point_lookup_matches_spark(sess)
+
+    # compaction rewrites the manifest list into sorted file(s)
+    repo.rewrite_manifests()
+    sess = repo.readonly_session()
+    for key in KEYS:
+        assert sess.get_chunk_bytes("/a", key) == model.get(key), key
+    _assert_point_lookup_matches_spark(sess)
 
 
 @settings(

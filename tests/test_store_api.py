@@ -235,3 +235,87 @@ def test_set_partial_values(spark, repo):
     # read-only store refuses
     with pytest.raises(Exception):
         ro.set_partial_values([("a/c/0", 0, b"n")])
+
+
+def _job_ids(spark, fn) -> list[int]:
+    """Ids of the Spark jobs ``fn`` launches, via its own job group.  A
+    fence job in a second group is waited for afterwards: job events
+    reach the status tracker through the asynchronous listener bus, in
+    order, so once the fence is visible every job of ``fn`` is too."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"point-reads-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "point reads")
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(f"{group}-fence", "fence")
+        spark.range(1).collect()
+        deadline = time.time() + 30
+        while not sc.statusTracker().getJobIdsForGroup(f"{group}-fence"):
+            assert time.time() < deadline, "fence job never reached the status tracker"
+            time.sleep(0.05)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _point_reads(sess, expect: dict) -> None:
+    """get / exists / getsize / chunk_type for 1-d keys of /a, each
+    checked against ``expect`` (key -> bytes, None = absent)."""
+    from icechunk_spark.repo.format import RefError
+
+    store = ChunkStore(sess)
+    for key, want in expect.items():
+        assert store.get(f"a/c/{key}") == want, key
+        assert store.exists(f"a/c/{key}") == (want is not None), key
+        if want is None:
+            with pytest.raises(RefError):
+                store.getsize(f"a/c/{key}")
+            assert sess.chunk_type("/a", [int(key)]) is ChunkType.uninitialized
+        else:
+            assert store.getsize(f"a/c/{key}") == len(want), key
+            assert sess.chunk_type("/a", [int(key)]) is not ChunkType.uninitialized
+
+
+def test_point_reads_launch_no_spark_jobs(spark, loaded):
+    """get / exists / getsize / chunk_type run no Spark job on a
+    read-only session, on a writable one with only buffered changes,
+    and on one with file-staged changes (a merged fork)."""
+    ext = np.arange(4, dtype="float64").tobytes()
+    base = {"0": b"x" * 1024, "1": b"tiny", "2": ext, "3": None}
+    ro = loaded.readonly_session()
+    assert _job_ids(spark, lambda: _point_reads(ro, base)) == []
+
+    buffered = loaded.writable_session()
+    buffered.set_chunk_bytes("/a", "3", b"b" * 2048)
+    ChunkStore(buffered).delete("a/c/0")
+    want = {**base, "0": None, "3": b"b" * 2048}
+    assert _job_ids(spark, lambda: _point_reads(buffered, want)) == []
+
+    staged = loaded.writable_session()
+    fork = staged.fork()
+    fork.set_chunk_bytes("/a", "3", b"f" * 2048)
+    fork.delete_chunk("/a", "1")
+    staged.merge(fork)  # flushes the fork to staged parquet files
+    assert staged._staged and all(kind == "file" for kind, _ in staged._staged)
+    want = {**base, "1": None, "3": b"f" * 2048}
+    assert _job_ids(spark, lambda: _point_reads(staged, want)) == []
+
+
+def test_lazy_staged_write_reads_its_own_writes(spark, loaded):
+    """A session holding a lazy staged DataFrame (write_array_df) keeps
+    the Spark resolve and sees its uncommitted chunk."""
+    sess = loaded.writable_session()
+    rows = spark.createDataFrame(
+        [(i, float(i)) for i in range(4, 8)], "i0 long, value double"
+    )
+    sess.write_array_df("/a", rows)
+    assert any(kind == "df" for kind, _ in sess._staged)
+    want = np.arange(4, 8, dtype="float64").tobytes()
+    store = ChunkStore(sess)
+    assert store.get("a/c/1") == want
+    assert store.getsize("a/c/1") == len(want)
+    assert sess.chunk_type("/a", [1]) is ChunkType.native
+    assert store.get("a/c/0") == b"x" * 1024
